@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for the headline queries so scan
   * pruning (ReadSchema/PushedFilters), join strategies (broadcast vs
   * shuffle), and WholeStageCodegen spans can be audited.
@@ -14,14 +12,7 @@ object PlanAudit {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
         "a6_merge_ids", "d_minhash_lsh", "e_ann_lsh")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     wanted.foreach { name =>
       println(s"\n========== $name ==========")

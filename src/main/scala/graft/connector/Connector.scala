@@ -32,6 +32,11 @@ final class Connector(
   var schema: Schema = _
   updateSchema()
 
+  /** The id joins [[retrieveIds]] cached via `FrameOps.mergeIds`;
+    * [[load]] releases them with its own cache on every path.
+    */
+  private val idJoins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
   /** Re-read the database schema (`connector.py:167-173`). */
   def updateSchema(): Unit = {
     introspected = Introspect(conn, schemaPattern)
@@ -103,6 +108,7 @@ final class Connector(
 
     var out = FrameOps.mergeIds(pre, dbFetch, alias, table,
       allowDuplication = allowDuplication)
+    idJoins += out
     if (replace) out = FrameOps.dropReplaced(out, schema.getColumns(table))
     FrameOps.postprocess(out, columns)
   }
@@ -162,6 +168,9 @@ final class Connector(
   /** The flagship: plan, cascade inserts in topological order threading
     * retrieved ids through the frame, then validate — §3.1
     * (`connector.py:376-452`).
+    *
+    * Every frame the load caches is released before it returns or
+    * throws; the returned frame recomputes from its lineage if used.
     */
   def load(
       data: DataFrame,
@@ -176,33 +185,31 @@ final class Connector(
     schema.checkSchemaNotEmpty()
     val pre = FrameOps.preprocess(data, columns).cache()
     val origData = pre // immutable — no clone needed (connector.py:424)
-
-    val instructions = schema.getLoadInstructions(pre.columns.toSeq)
-
-    // phase 1: insert+retrieve in topo order, ids cascade through the frame
-    val cached = scala.collection.mutable.ArrayBuffer(pre)
-    val afterRetrieve = instructions.insertAndRetrieve.foldLeft(pre) {
-      (acc, spec) =>
-        val next = insertAndRetrieveIds(acc, spec.table, spec.alias,
-          spec.columns.toMap, replace, allowDuplication).cache()
-        cached += next
-        next
-    }
-    // phase 2: plain inserts
-    instructions.insert.foreach { spec =>
-      insert(afterRetrieve, spec.table, spec.columns.toMap)
-    }
-
     try {
+      val instructions = schema.getLoadInstructions(pre.columns.toSeq)
+
+      // phase 1: insert+retrieve in topo order, ids cascade through the
+      // frame; each step reads the id join mergeIds cached
+      val afterRetrieve = instructions.insertAndRetrieve.foldLeft(pre) {
+        (acc, spec) =>
+          insertAndRetrieveIds(acc, spec.table, spec.alias,
+            spec.columns.toMap, replace, allowDuplication)
+      }
+      // phase 2: plain inserts
+      instructions.insert.foreach { spec =>
+        insert(afterRetrieve, spec.table, spec.columns.toMap)
+      }
+
       if (compare)
         this.compare(origData, compareQuery, Map.empty, where, exact)
+      FrameOps.postprocess(afterRetrieve, columns)
     } finally {
-      // free intermediates; repeated loads in a long-lived session
-      // would otherwise accumulate cached RDDs until LRU pressure
-      cached.dropRight(1).foreach(_.unpersist())
+      // newest first, so no released cache is re-planned for a
+      // dependent that is itself about to go; repeated loads in a
+      // long-lived session would otherwise accumulate cached frames
+      (idJoins.reverseIterator ++ Iterator(pre)).foreach(_.unpersist())
+      idJoins.clear()
     }
-
-    FrameOps.postprocess(afterRetrieve, columns)
   }
 }
 

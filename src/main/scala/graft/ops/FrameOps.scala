@@ -113,9 +113,8 @@ object FrameOps {
     *   - no row loss (left join invariant, asserted anyway),
     *   - no duplication unless `allowDuplication`,
     *   - no null ids after the join ([[MissingKeysAfterMergeError]]).
-    *
-    * @param broadcastDb broadcast the db side (default): retrieved
-    *   id tables are deduped dimension rows, small next to the data.
+    * The db side is broadcast: retrieved id tables are deduped
+    * dimension rows, small next to the data.
     */
   def mergeIds(
       df: DataFrame,
@@ -123,15 +122,13 @@ object FrameOps {
       alias: String,
       table: String,
       allowDuplication: Boolean = false,
-      broadcastDb: Boolean = true,
   ): DataFrame = {
     require(dbDf.columns.contains(alias),
       "Provided alias not found in fetch from database.")
     val onColumns = df.columns.toSeq.intersect(dbDf.columns.toSeq)
 
     val l = df.alias("l")
-    val rRaw = matchTypes(dbDf, df.schema).alias("r")
-    val r = if (broadcastDb) broadcast(rRaw) else rRaw
+    val r = broadcast(matchTypes(dbDf, df.schema).alias("r"))
 
     val cond: Column = onColumns
       .map(c => col(s"l.`$c`") <=> col(s"r.`$c`"))

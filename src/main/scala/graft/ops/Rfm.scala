@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * over that frame — range-partition on the metric, per-partition
   * offsets from a bounded driver collect (one row per partition),
   * map-side sequential rank — never a single-partition window. Monetary sums go through the decimal→string→double chain
-  * ([[graft.SparkEntry]]'s decAgg rationale): order-independent exact
+  * ([[graft.gates.GateSupport]]'s decAgg rationale): order-independent exact
   * aggregation, then a correctly-rounded double both engines parse
   * identically.
   */

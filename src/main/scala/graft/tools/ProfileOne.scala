@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -10,39 +9,40 @@ import scala.collection.mutable
   * <query> <sfDir> [reps]"`. Prints, for the LAST rep (steady state),
   * every job's wall time and every stage's task count / task-time sum
   * / shuffle bytes — the local stand-in for the Spark UI's stage page
-  * (guide §1/§7), which the bench keeps disabled. Reads
-  * SPARK_GRAFT_CPUS like Bench so the profile matches the measured
-  * regime.
+  * (guide §1/§7), which the bench keeps disabled. Runs in
+  * [[graft.GraftSession]] like Bench, so the profile matches the
+  * measured regime. Each rep prints its own wall time, so reps=3 also
+  * shows a query's cold-vs-steady cost.
   */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
     val name = args(0); val dir = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
 
     case class StageRow(id: Int, name: String, tasks: Int, taskMs: Long,
         shufReadB: Long, shufWriteB: Long)
     val jobs = mutable.LinkedHashMap.empty[Int, (Long, Long)] // id -> (t0, t1)
     val stages = mutable.LinkedHashMap.empty[Int, StageRow]
-    @volatile var record = false
+    val recordedStages = mutable.Set.empty[Int]
+    // every rep runs under its own job group and only events of the
+    // last rep's group are recorded: a straggler event from an earlier
+    // rep is dropped however late the async listener bus delivers it
+    def group(rep: Int) = s"profile-$name-rep$rep"
+    val recorded = group(reps)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (record) jobs(j.jobId) = (j.time, 0L)
+        if (Option(j.properties).exists(
+            _.getProperty("spark.jobGroup.id") == recorded)) {
+          jobs(j.jobId) = (j.time, 0L)
+          recordedStages ++= j.stageIds
+        }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        if (record) jobs.get(j.jobId).foreach { case (t0, _) =>
+        jobs.get(j.jobId).foreach { case (t0, _) =>
           jobs(j.jobId) = (t0, j.time)
         }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        if (record) {
+        if (recordedStages(s.stageInfo.stageId)) {
           val i = s.stageInfo
           // taskMetrics can be null for stages completed with
           // failures — default the metric fields to 0 rather than
@@ -58,17 +58,13 @@ object ProfileOne {
 
     for (i <- 1 to reps) {
       spark.catalog.clearCache()
-      // flip record BEFORE clearing: the listener bus is async, so a
-      // straggler event from the PREVIOUS rep can land after the flip
-      // — clearing second evicts any such leakage instead of letting
-      // it pollute the recorded rep
-      record = i == reps
-      jobs.clear(); stages.clear()
+      spark.sparkContext.setJobGroup(group(i), s"ProfileOne $name rep $i")
       val t0 = System.nanoTime()
       val n = graft.SparkEntry.queries(name)(spark, dir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"PROFILE $name rep=$i rows=$n sec=$sec%.3f")
     }
+    spark.sparkContext.clearJobGroup()
     // one settle so late listener events land
     Thread.sleep(300)
     // a job whose end event never landed (t1 == 0) would print a

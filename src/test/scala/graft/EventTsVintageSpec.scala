@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The events read boundary (SparkEntry's ts normalization) must
+/** The events read boundary (GateSupport's ts normalization) must
   * accept BOTH testdata vintages — int64-nanosecond `ts` (pre-r10)
   * and `timestamp[us]` (r10+) — and produce identical results. The
   * shipped testdata only exercises one vintage at a time, so without

@@ -148,17 +148,15 @@ class PlanGuardSpec extends AnyFunSuite with SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every registered query has an oracle, and vice versa") {
-    // the allowlist is EMPTY as of round 12: the BPE trainer rows got
-    // real DuckDB oracles (Bpe.mergesSql's span-encoded replace()
-    // rendering), so every board row is hash-checked by the driver
-    val rowsOnly = Set.empty[String]
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(q.diff(o) == rowsOnly,
-      s"queries without oracle beyond the rows-only allowlist: ${q.diff(o).diff(rowsOnly)}; " +
-        s"allowlisted but oracled/absent: ${rowsOnly.diff(q.diff(o))}")
-    assert(o.diff(q).isEmpty, s"oracle-only: ${o.diff(q)}")
+  test("every gate name is registered exactly once") {
+    // a Gate pairs its builder with its oracle by construction, but the
+    // name-keyed views would silently keep only the last of two gates
+    // sharing a name — the earlier one would never run
+    val dupes = SparkEntry.gates.groupBy(_.name).collect {
+      case (n, gs) if gs.size > 1 => n
+    }
+    assert(dupes.isEmpty, s"gate names registered more than once: ${dupes.mkString(", ")}")
+    assert(SparkEntry.queries.size == SparkEntry.gates.size)
   }
 
   test("capPerGroup broadcasts the group counts — a map-only filter, no data shuffle") {

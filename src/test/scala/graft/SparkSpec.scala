@@ -11,9 +11,9 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       // old events.parquet vintages carry NANOS-annotated timestamps;
-      // this reads those as raw longs exactly like the Verify/Bench/
-      // TimeOne sessions do (a no-op on timestamp[us] vintages — the
-      // read boundary in SparkEntry normalizes either way)
+      // this reads those as raw longs exactly like GraftSession does
+      // (a no-op on timestamp[us] vintages — the read boundary in
+      // gates.GateSupport normalizes either way)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -31,6 +31,11 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     st.close(); c.commit(); c.close()
   }
 
+  /** Nothing `load` cached may outlive it, on success or failure. */
+  private def assertNoCache(): Unit =
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "load left a cached frame behind")
+
   private def strDf(pairs: (String, Seq[String])*): DataFrame = {
     val rows = pairs.head._2.indices.map(i => Row(pairs.map(_._2(i)): _*))
     spark.createDataFrame(
@@ -122,10 +127,14 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     val second = strDf("naam" -> Seq("a", "b", "c"), "waarde" -> Seq("4", "5", "6"))
       .withColumn("waarde", col("waarde").cast("int"))
 
+    spark.catalog.clearCache()
     Connector.withConnection(spark, url)(c => c.load(first))
+    assertNoCache()
+    spark.catalog.clearCache() // the failure path is checked on its own
     intercept[InsertingDataFailedError] {
       Connector.withConnection(spark, url)(c => c.load(second))
     }
+    assertNoCache()
     // rollback left first load intact
     Connector.withConnection(spark, url) { c =>
       val rows = JdbcFrames.queryToDataFrame(spark, c.conn,
@@ -168,7 +177,9 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
       "dealer" -> "dealer.naam",
       "aankoop" -> "datum")
 
+    spark.catalog.clearCache()
     Connector.withConnection(spark, url)(c => c.load(data, columns = columns))
+    assertNoCache()
 
     // read back through the hand-written reconstruction query the
     // reference uses, and check frame equality (order-insensitive)
